@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line of per-query seconds.
   *
@@ -459,84 +457,7 @@ object Bench {
     * empty) with `count()`, return the JSON line. */
   private def runSuite(args: Seq[String], warmup: Boolean): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE ON by default — matching the DEPLOYMENT.md cluster
-      // recommendation, so the measured config IS the shipped config.
-      // History: round-5's FULL surface saw c03's contraction loop hit
-      // 73 s AQE-on (re-planning + re-codegen of every lazily-cut
-      // round), arguing for off-locally. The round-6 lazy-truncation
-      // rework removed that pathology, and two same-surface A/Bs since
-      // (r8: 112.3 s on vs 116.6 s off; c03 4.6 s, c11 4.1 s AQE-on)
-      // confirm on is now neutral-to-faster everywhere. Set
-      // SPARK_GRAFT_AQE=false only to reproduce historical off runs.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE partition coalescing ON (the Spark default) since r15: the
-      // r14 driver run measured local[32] 35 % SLOWER than local[8] on
-      // identical code — at sf0.1 every exchange carries KB-scale data
-      // into `cpus` reduce tasks, so a 32-core run pays 4× the tiny-task
-      // fixed cost of an 8-core run for zero extra parallelism (worst:
-      // t17 1.6×, t08/m04 1.65× slower at 32 cores, measured warm this
-      // session). Coalescing merges those KB partitions down and the
-      // inversion disappears. parallelismFirst stays at its true
-      // default, so the merge target is max(bytes/parallelism,
-      // minPartitionSize): the floor is lowered 1m → 64k because the
-      // CPU-dense mid-size shuffles (the documents/embeddings fan-outs,
-      // exploded gram tables — single-digit-MB but seconds of CPU)
-      // must KEEP their width; 64k only collapses the genuinely
-      // featherweight exchanges. Scale story: the floor binds only
-      // when bytes/parallelism < 64k — at 100 TB no query-path shuffle
-      // is that small, so the setting is inert there (production keeps
-      // its own advisory sizing, DEPLOYMENT.md §AQE); it is a
-      // tiny-input de-overheader, not a local tuning of real shuffles.
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "64k"))
-      // 4m, deliberately BELOW Spark's 10m default: a broadcast hash
-      // relation is built on ONE thread, so a "small" 600k-row side
-      // that sneaks under a fat threshold serializes the whole stage
-      // (observed: q04 28s from broadcasting projected lineitem).
-      // True dims are far under 4m at any bench SF; genuinely-small
-      // intermediates are hinted with broadcast() at the query site.
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      // Align whole-stage-codegen fallback with HotSpot's 8000-bytecode
-      // JIT ceiling (DontCompileHugeMethods): a fused method over this
-      // size would never be JIT-compiled and runs interpreted at
-      // 10-50x. SPARK-21871's knob.
-      .config("spark.sql.codegen.hugeMethodLimit", "4000")
-      // Split generated expression code into ~256-byte-estimate
-      // methods (default 1024): keeps every generated method far below
-      // HotSpot's compile ceiling so the JIT always wins; fat methods
-      // (decimal money math) otherwise sat in a dead zone where C2
-      // sometimes never compiled them and a 200k-row task burned
-      // minutes interpreted (observed in Decimal.changePrecision).
-      .config("spark.sql.codegen.methodSplitThreshold", "256")
-      // Catalyst extension point: range-join binning rule + SQL
-      // function registry (graft.GraftExtensions scaladoc).
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binSeconds", "3600")
-      // LSH geometry: UNSET by default so Similarity's corpus-size
-      // auto-sizing (bits ∝ log2 n) is the measured path; the
-      // SPARK_GRAFT_LSH_* envs pass an explicit override through for
-      // geometry experiments.
-      .config(Map.empty[String, String] ++
-        sys.env.get("SPARK_GRAFT_LSH_PLANES").map("spark.graft.lsh.planes" -> _) ++
-        sys.env.get("SPARK_GRAFT_LSH_BANDS").map("spark.graft.lsh.bands" -> _))
-      // tmpfs scratch for shuffle/broadcast blocks when available —
-      // the sandbox block device write-throttles intermittently and
-      // poisons shuffle-heavy timings (LocalScratch scaladoc).
-      .config(LocalScratch.conf)
-      // dev-only: SPARK_GRAFT_EVENTLOG=true dumps per-stage metrics
-      .config("spark.eventLog.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"))
-      .config("spark.eventLog.dir", "/tmp/spark-events")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // Warm the JVM/codegen once on the smallest SF so the first timed
     // query doesn't also pay first-call framework classloading. ONE

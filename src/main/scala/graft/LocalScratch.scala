@@ -1,8 +1,7 @@
 package graft
 
-/** Scratch-disk selection for the LOCAL harness mains (Bench / Verify /
-  * StreamBench / ScaleData) and the test session: prefer a tmpfs for
-  * `spark.local.dir`.
+/** Scratch-disk selection for every local session ([[GraftSession]]):
+  * prefer a tmpfs for `spark.local.dir`.
   *
   * Why: `spark.local.dir` hosts shuffle files, broadcast pieces and
   * block-manager spill. This sandbox's block device is intermittently
@@ -19,7 +18,7 @@ package graft
   */
 object LocalScratch {
 
-  /** Conf map to splat into a local `SparkSession.builder`: points
+  /** Conf map [[GraftSession]] applies to every local session: points
     * `spark.local.dir` at a tmpfs path when one exists and the operator
     * hasn't already chosen dirs via `SPARK_LOCAL_DIRS`. Empty map (no
     * override) otherwise — including on hosts without /dev/shm. */

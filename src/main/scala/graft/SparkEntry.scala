@@ -19,30 +19,28 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** Every query module; each carries its builders and its oracle SQL. */
+  val modules: Seq[QueryModule] = Seq(
+    Relational, Relational2, Relational3, Relational4, Relational5, Relational6,
+    Upsert, Corpus, Dedup, Similarity, TextAnalysis, Multimodal, StreamingOps, Sketches,
+    graft.functions.WeightedAvg,
+    graft.sources.Bucketing, graft.sources.PartitionedLayout,
+    graft.sources.SourceFormats, graft.sources.LakeMaintenance, graft.sources.SnapshotLog)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++
-      Relational4.queries ++ Relational5.queries ++ Relational6.queries ++
-      Upsert.queries ++ Corpus.queries ++
-      Dedup.queries ++ Similarity.queries ++ TextAnalysis.queries ++
-      Multimodal.queries ++ StreamingOps.queries ++ Sketches.queries ++
-      graft.functions.WeightedAvg.queries ++
-      graft.sources.Bucketing.queries ++ graft.sources.PartitionedLayout.queries ++
-      graft.sources.SourceFormats.queries ++ graft.sources.LakeMaintenance.queries ++
-      graft.sources.SnapshotLog.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops
     * (d02 minhash-LSH, d03 simhash, s02 ann-lsh → rows-only check +
     * ScalaTest property coverage instead). */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Relational2.oracle ++ Relational3.oracle ++
-      Relational4.oracle ++ Relational5.oracle ++ Relational6.oracle ++
-      Upsert.oracle ++ Corpus.oracle ++
-      Dedup.oracle ++ Similarity.oracle ++ TextAnalysis.oracle ++
-      Multimodal.oracle ++ StreamingOps.oracle ++ Sketches.oracle ++
-      graft.functions.WeightedAvg.oracle ++
-      graft.sources.Bucketing.oracle ++ graft.sources.PartitionedLayout.oracle ++
-      graft.sources.SourceFormats.oracle ++ graft.sources.LakeMaintenance.oracle ++
-      graft.sources.SnapshotLog.oracle
+  val oracleSql: Map[String, String] = modules.flatMap(_.oracle).toMap
+}
+
+/** A registered group of named queries. `oracle` holds the DuckDB SQL
+  * of those of its own `queries` that SQL can express. */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracle: Map[String, String]
 }

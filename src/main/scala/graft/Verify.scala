@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,41 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only: Set[String] = rest.toSet // optional subset for dev iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Same join-planning knobs as Bench, so the plans the oracle
-      // verifies are the plans the bench measures.
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      // see Bench.scala: AQE on by default everywhere since round 9
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Align whole-stage-codegen fallback with HotSpot's 8000-bytecode
-      // JIT ceiling (DontCompileHugeMethods): a fused method over this
-      // size would never be JIT-compiled and runs interpreted at 10-50x.
-      // Falling back to per-operator execution keeps codegen'd
-      // projections AND JIT-able method sizes. SPARK-21871's knob.
-      .config("spark.sql.codegen.hugeMethodLimit", "4000")
-      // Split generated expression code into ~256-byte-estimate methods
-      // (default 1024): keeps every generated method far below HotSpot's
-      // compile ceiling so the JIT always wins; fat methods (decimal
-      // money math) otherwise sat in a dead zone where C2 sometimes
-      // never compiled them and a 200k-row task burned minutes in the
-      // interpreter (observed in Decimal.changePrecision).
-      .config("spark.sql.codegen.methodSplitThreshold", "256")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // Catalyst extension point: range-join binning rule + SQL
-      // function registry (graft.GraftExtensions scaladoc).
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binSeconds", "3600")
-      // tmpfs scratch (LocalScratch scaladoc): the sandbox block device
-      // write-throttles intermittently; shuffle/broadcast scratch on
-      // RAM keeps the correctness drive off the pathological path.
-      .config(LocalScratch.conf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Typed UDAF surface — the user-extensible aggregation path the
   * reference lacks entirely (no function surface at all,
@@ -25,7 +25,7 @@ import graft.Tables
   * (Long headroom: ~9.2e18 ≫ any per-group Σ cents·qty we'd meet;
   * switch the buffer to DECIMAL(38) beyond ~1e14 rows per group.)
   */
-object WeightedAvg {
+object WeightedAvg extends QueryModule {
 
   /** IN = (price, quantity); BUF = (Σ round(price·100)·qty, Σ qty). */
   object WeightedAvgCents

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.Checkpoint.TruncateOps
 
 /** Corpus-preparation operators — the remaining steps a large-scale
@@ -20,7 +20,7 @@ import graft.Checkpoint.TruncateOps
   * standard iterative min-label propagation whose rounds touch only
   * (id, component) pairs; c05 is one explode + hash aggregate.
   */
-object Corpus {
+object Corpus extends QueryModule {
 
   /** Tokens per packed training sequence (c02). */
   private val SeqLen = 4096

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.Checkpoint.TruncateOps
 
 /** Deduplication operators for large-scale training-data pipelines —
@@ -17,7 +17,7 @@ import graft.Checkpoint.TruncateOps
   * per-doc clustering and the candidate-pair joins on band keys, all
   * linear in the data.
   */
-object Dedup {
+object Dedup extends QueryModule {
 
   import org.apache.spark.sql.expressions.Window
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.Checkpoint.TruncateOps
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with
@@ -20,7 +20,7 @@ import graft.Checkpoint.TruncateOps
   * feature extraction is a narrow per-partition pass (no shuffle), and
   * the partition count — not driver memory — bounds parallelism.
   */
-object Multimodal {
+object Multimodal extends QueryModule {
 
   /** STUB — stands in for a real image/audio decoder. Deterministic
     * pure function of the bytes so tests and the oracle can check the

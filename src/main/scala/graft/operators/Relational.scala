@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Relational operator surface (SURVEY §2.2 rightmost column): the
   * scans/filters/joins/aggregations/windows/set-ops/scalar-functions
@@ -25,7 +25,7 @@ import graft.Tables
   * the fact table (lineitem) is never collected, never cross-joined,
   * and always filtered before joining so pushdown reaches the scan.
   */
-object Relational {
+object Relational extends QueryModule {
 
   /** Exact 2-dp decimal for money/quantity math; sums in decimal are
     * order-independent, unlike double sums. */

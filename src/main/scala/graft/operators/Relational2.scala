@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.sources.SchemaMapper
 
 /** Second tranche of the relational surface: outer joins, math/array
@@ -13,7 +13,7 @@ import graft.sources.SchemaMapper
   * report (reference op #3, `generate_create_table_sql`,
   * /root/reference/src/main.rs:104-118).
   */
-object Relational2 {
+object Relational2 extends QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

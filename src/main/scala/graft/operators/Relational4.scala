@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Fourth relational batch: map-typed aggregation state, regular
   * expressions, FILTER-clause conditional aggregates, calendar
@@ -16,7 +16,7 @@ import graft.Tables
   * then cast to double, total-order ORDER BY, no collect(), no cross
   * joins.
   */
-object Relational4 {
+object Relational4 extends QueryModule {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
   private def asDouble(c: org.apache.spark.sql.Column) = c.cast(DoubleType)

@@ -4,14 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Fifth relational batch: explicit skew-salted join and
   * distribution-rank window functions. Both absent from the reference
   * (whole program is `/root/reference/src/main.rs:49-210`, no joins or
   * windows at all); both oracle-checked against DuckDB.
   */
-object Relational5 {
+object Relational5 extends QueryModule {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
   private def asDouble(c: org.apache.spark.sql.Column) = c.cast(DoubleType)

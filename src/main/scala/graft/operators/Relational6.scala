@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.Checkpoint.TruncateOps
 
 /** Sixth relational batch: the Spark-4 SQL-surface operators the
@@ -19,7 +19,7 @@ import graft.Checkpoint.TruncateOps
   * Scale notes per query inline — each is a fixed-size or
   * key-partitioned plan that survives a 100x fact-table scale-up.
   */
-object Relational6 {
+object Relational6 extends QueryModule {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
   private def asDouble(c: org.apache.spark.sql.Column) = c.cast(DoubleType)

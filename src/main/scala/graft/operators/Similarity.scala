@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.Checkpoint.TruncateOps
 
 /** Similarity search over the `embeddings` fixture (vec_id,
@@ -24,7 +24,7 @@ import graft.Checkpoint.TruncateOps
   * — codegen'd, no UDF, no shuffle. Elements are cast float→double
   * (exact) before arithmetic so results are engine-portable.
   */
-object Similarity {
+object Similarity extends QueryModule {
 
   /** Left-fold dot product, matching the oracle's
     * list_sum(list_transform(...)) evaluation order exactly. */
@@ -77,7 +77,7 @@ object Similarity {
     * job, memoized per plan per session), so a 100 TB run scales its
     * bucket space without anyone remembering a knob. The confs
     * OVERRIDE the heuristic for deployments that have tuned geometry
-    * (Bench passes them through from SPARK_GRAFT_LSH_* env). */
+    * (GraftSession leaves them unset). */
   val PlanesConf = "spark.graft.lsh.planes"
   val BandsConf = "spark.graft.lsh.bands"
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Approximate/sketch aggregations — the constant-memory versions of
   * exact aggregates, which is what survives a 100 TB cardinality
@@ -15,7 +15,7 @@ import graft.Tables
   * asserts the estimates against exact values within published error
   * bounds (HLL++ rsd default 5%; percentile_approx accuracy 10000).
   */
-object Sketches {
+object Sketches extends QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a01_approx_sketches" -> ((s, d) =>

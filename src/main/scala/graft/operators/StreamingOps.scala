@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.streaming.EventStreams
 
 /** Batch-mode registrations of the streaming window aggregations
@@ -11,7 +11,7 @@ import graft.streaming.EventStreams
   * results in batch and streaming for on-time data, so the gate
   * covers the streaming plans (SURVEY §7.3 M3).
   */
-object StreamingOps {
+object StreamingOps extends QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st01_tumbling_window" -> ((s, d) =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.Checkpoint.TruncateOps
 
 /** Text-analysis operators over the `documents` table: language ID,
@@ -14,7 +14,7 @@ import graft.Checkpoint.TruncateOps
   * aggregation), which is exactly what a 100 TB text-cleaning pass
   * needs.
   */
-object TextAnalysis {
+object TextAnalysis extends QueryModule {
 
   /** Language-ID markers. The four space-delimited languages score by
     * whole-token equality; zh (no word spaces) scores by per-token

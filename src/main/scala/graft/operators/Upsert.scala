@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Upsert / MERGE semantics as a batch operator. The reference is
   * append-only — re-running it duplicates every row
@@ -21,7 +21,7 @@ import graft.Tables
   * (AQE skew splitting, broadcast if the source batch is small —
   * which a CDC batch usually is, so the hint below).
   */
-object Upsert {
+object Upsert extends QueryModule {
 
   /** SCD-1 merge: rows of `source` overwrite same-key rows of
     * `target` column-by-column; source-only keys insert; target-only

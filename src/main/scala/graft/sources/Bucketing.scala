@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Bucketed storage — the co-located-join strategy the 100 TB design
   * stance calls for. Writing both join sides pre-hashed into the same
@@ -18,7 +18,7 @@ import graft.Tables
   * this is the Spark-native capability that replaces "hope the data
   * arrives partitioned right".
   */
-object Bucketing {
+object Bucketing extends QueryModule {
 
   val NumBuckets = 8
 

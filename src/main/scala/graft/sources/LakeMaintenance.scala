@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Lake maintenance — the rewrite operations a 100 TB parquet lake
   * runs continuously plus the file-statistics index that makes the
@@ -35,7 +35,7 @@ import graft.Tables
   * LakeMaintenanceSpec asserts the layout properties themselves
   * (file-per-partition, per-file dimension spans).
   */
-object LakeMaintenance {
+object LakeMaintenance extends QueryModule {
 
   /** Z-ordered layout sizing: the file count is proportional to input
     * bytes (~1 GiB target files — the Delta OPTIMIZE shape), floored at

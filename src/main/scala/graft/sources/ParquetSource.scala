@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Reference-parity Parquet source (SURVEY §2.1 ops 1–2).
   *
@@ -14,19 +13,7 @@ import org.apache.spark.sql.types.StructType
   */
 object ParquetSource {
 
-  /** Open a Parquet path. `columnarBatchSize` mirrors the reference's
-    * record-batch size knob (`src/main.rs:74`); Spark default is 4096.
-    */
-  def read(spark: SparkSession, path: String,
-           columnarBatchSize: Int = 4096,
-           mergeSchema: Boolean = false): DataFrame =
-    spark.read
-      .option("mergeSchema", mergeSchema.toString)
-      .parquet(path)
-
-  /** Footer-inferred schema without reading data (SURVEY §2.1 op 2:
-    * `arrow_reader.get_schema()`, `src/main.rs:56`).
-    */
-  def schemaOf(spark: SparkSession, path: String): StructType =
-    spark.read.parquet(path).schema
+  /** Open a Parquet path. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
 }

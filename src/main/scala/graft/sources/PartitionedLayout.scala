@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Hive-style partitioned layout — directory partition pruning, the
   * second leg of the 100 TB storage-layout story (the first is
@@ -15,7 +15,7 @@ import graft.Tables
   * asserts the filter lands in the scan's `PartitionFilters` (not
   * the data filters).
   */
-object PartitionedLayout {
+object PartitionedLayout extends QueryModule {
 
   /** Write orders partitioned by order year under the scratch dir
     * ([[graft.LocalScratch.scratchDir]]), once per (JVM, sfDir). */

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Snapshot / time-travel manifest over parquet layouts — the atomic
   * commit-log pattern of Iceberg metadata files and the Delta
@@ -49,7 +49,7 @@ import graft.Tables
   * Readers plan from `read(table, v)` = `spark.read.parquet(files…)`,
   * so pushdown/pruning/AQE all apply unchanged.
   */
-object SnapshotLog {
+object SnapshotLog extends QueryModule {
 
   /** `stats` carries optional per-file [min, max] of one integral
     * column (`s:` manifest lines) — the Iceberg scan-planning stats

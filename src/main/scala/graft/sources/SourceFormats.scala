@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** CSV / JSON source formats — the `DataFrameReader` surface beyond
   * parquet. The reference reads exactly one hardcoded parquet file
@@ -24,7 +24,7 @@ import graft.Tables
   * the argument for converting to parquet on first touch (exactly
   * what this operator's write side is).
   */
-object SourceFormats {
+object SourceFormats extends QueryModule {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
 

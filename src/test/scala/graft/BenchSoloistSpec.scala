@@ -37,8 +37,8 @@ class BenchSoloistSpec extends AnyFunSuite {
       regs = reg.findAllMatchIn(src).map(m => (m.start, m.group(1))).toVector
       m <- call.findAllMatchIn(src).toSeq
       encl <- regs.takeWhile(_._1 < m.start).lastOption.map(_._2).toSeq
-      // only real registrations count (Explain/Profile call queries()
-      // outside any registry; SparkEntry's aggregation references too)
+      // only real registrations count (Explain and SparkEntry.entry
+      // call queries() outside any registry)
       if SparkEntry.queries.contains(encl) && SparkEntry.queries.contains(m.group(1))
       if encl != m.group(1)
     } yield (f.toString, encl, m.group(1))

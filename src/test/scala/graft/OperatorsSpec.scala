@@ -18,6 +18,14 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("every registered query runs and every oracle key has a query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    // merging the modules lets a later duplicate name silently win
+    val names = SparkEntry.modules.flatMap(_.queries.keys)
+    assert(names.size === SparkEntry.queries.size,
+      s"names registered by more than one module: ${names.diff(names.distinct).distinct}")
+    for (m <- SparkEntry.modules)
+      assert(m.oracle.keySet.subsetOf(m.queries.keySet),
+        s"${m.getClass.getSimpleName.stripSuffix("$")} has oracle SQL for queries " +
+          s"it does not register: ${m.oracle.keySet -- m.queries.keySet}")
   }
 
   test("q01 groups by (returnflag, linestatus) with positive aggregates") {
