@@ -456,7 +456,7 @@ object Upsert extends QueryModule {
     // force a read-modify-write upstream of every commit. A patch
     // batch commits O(rows × patched columns) + one manifest (`p:`
     // lines), ZERO data-file rewrites AND zero pre-reads; readers
-    // coalesce per column by sequence (readPatched): a patch older
+    // coalesce per column by sequence (readMor): a patch older
     // than the row-defining mutation is masked, a later delete
     // retracts it, a later patch overrides column-by-column, and a
     // patch never inserts. The interleave here drives every rule:
@@ -468,7 +468,7 @@ object Upsert extends QueryModule {
     // + 1 update + 1 delete files before compaction, none after,
     // compacted read ≡ patched read both ways, replay committed
     // nothing, and the delete-overlay consumer path REFUSES the
-    // patch-carrying snapshot (readPatched/compact are the aware
+    // patch-carrying snapshot (readMor/compact are the aware
     // paths). At 100 TB: a 1000-row 2-column patch against a wide
     // 100k-file table is one slim file + one manifest; the read tax
     // is one broadcast join per patched column until compaction.
@@ -513,7 +513,7 @@ object Upsert extends QueryModule {
       // pinned once: three consumers of `patched`, two of `compacted`
       // (the u08 rationale; the patched read is the costliest overlay —
       // one broadcast join per patched column on top of the MOR resolve)
-      val patched = SnapshotLog.readPatched(s, table, vP, "o_orderkey")
+      val patched = SnapshotLog.readMor(s, table, vP, "o_orderkey")
         .truncatedLazy
       // consumer delete-overlay paths must refuse, not serve stale
       SnapshotLog.tagSnapshot(s, table, "pre-compact", vP)

@@ -90,7 +90,7 @@ object SnapshotLog extends QueryModule {
       ts: Long = 0L, // commit-time epoch millis (`ts:` line; 0 = legacy)
       // partial-column patch files (`p:` lines, u11): each carries
       // (key + a SUBSET of columns); readers coalesce per column by
-      // sequence (readPatched). Prefix-filter parsing keeps older
+      // sequence (readMor). Prefix-filter parsing keeps older
       // builds' manifests compatible (they simply have no p: lines).
       patches: Seq[(String, Long)] = Nil)
 
@@ -142,34 +142,20 @@ object SnapshotLog extends QueryModule {
   private def ckptPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${logDir(table)}/_last_checkpoint")
 
-  private def readCkptHint(s: SparkSession, table: String): Option[Long] = {
-    val fs = fsOf(s); val p = ckptPath(table)
-    if (!fs.exists(p)) return None
-    scala.util.Try {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.split("\n").filter(_.nonEmpty)
-      require(lines.length == 2 && lines(1) == "end", "torn checkpoint pointer")
-      lines(0).toLong
-    }.toOption
-  }
+  /** The shared pointer codec, made advisory: a torn or unreadable
+    * hint reads as absent (the listing decides) instead of failing
+    * closed. */
+  private def readCkptHint(s: SparkSession, table: String): Option[Long] =
+    try readVersionPointer(s, ckptPath(table), "checkpoint pointer")
+    catch { case _: java.io.IOException => None }
 
-  /** Best-effort pointer update (temp + rename; a loss or crash only
-    * costs the next reader its shortcut, never correctness). A stale
-    * CONCURRENT update landing after ours is equally fine — forward
-    * probing absorbs any lag. */
+  /** Best-effort pointer update (a loss or crash only costs the next
+    * reader its shortcut, never correctness). A stale CONCURRENT
+    * update landing after ours is equally fine — forward probing
+    * absorbs any lag. */
   private def writeCkptHint(s: SparkSession, table: String, v: Long): Unit =
-    try {
-      val fs = fsOf(s)
-      val dst = ckptPath(table)
-      val tmp = new org.apache.hadoop.fs.Path(
-        dst.getParent, s"._last_checkpoint.tmp-${java.util.UUID.randomUUID}")
-      val out = fs.create(tmp, false)
-      try out.write(s"$v\nend".getBytes("UTF-8")) finally out.close()
-      fs.delete(dst, false)
-      if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-    } catch { case _: java.io.IOException => () }
+    try writeVersionPointer(s, ckptPath(table), v, "checkpoint pointer")
+    catch { case _: java.io.IOException => () }
 
   /** Highest version with a VALID (end-sentinel-complete) manifest;
     * 0 when the table has no committed snapshot. Torn or garbage
@@ -607,21 +593,10 @@ object SnapshotLog extends QueryModule {
         "readMor (or compactMor first); this path cannot overlay them")
     require(m.patches.isEmpty,
       s"snapshot v${m.version} carries partial-column patch files — read " +
-        "it through readPatched (or compactMor first); this path cannot " +
+        "it through readMor (or compactMor first); this path cannot " +
         "coalesce them")
     if (m.deletes.isEmpty) base
-    else {
-      // all delete files of one table share the single-key schema by
-      // construction (deleteMor writes `keys.select(key)`) — the first
-      // footer's metadata schema covers the read, zero inference jobs
-      val delFiles = m.deletes.map(_._1)
-      val raw = footerSparkSchema(s, delFiles.head) match {
-        case Some(st) => s.read.schema(st).parquet(delFiles: _*)
-        case None => s.read.parquet(delFiles: _*)
-      }
-      val dk = raw.distinct()
-      base.join(broadcast(dk), dk.columns.toSeq, "left_anti")
-    }
+    else resolveMor(s, m, readFile(s, m.deletes.head._1).columns.head, base)
   }
 
   /** Read a `$v\nend` version-pointer file: Some(v) when present and
@@ -704,18 +679,9 @@ object SnapshotLog extends QueryModule {
     * version space, which may exceed the receiving table's counter;
     * a writer that blindly used cur+1 would then reuse (or fall
     * below) a live sequence and invert latest-wins. */
-  private[graft] def nextSeq(m: Manifest, cur: Long): Long =
+  private def nextSeq(m: Manifest, cur: Long): Long =
     math.max(cur, m.seqs.values.foldLeft(0L)(math.max)) + 1
 
-  /** Commit a MERGE-ON-READ equality delete: `keys` (one column named
-    * `key`) is written as a small delete file and the new snapshot
-    * carries the SAME data files plus the delete file — O(deleted
-    * keys) work and one atomic commit, never a data-file rewrite.
-    * Deletes accumulate across versions until [[compactMor]] folds
-    * them in; [[readMor]] applies them at scan time. The delete file
-    * gets the next commit's SEQUENCE, so it beats any earlier update
-    * file on the same key (and loses to a later one) — the Iceberg
-    * sequence-number contract. */
   /** Min/max of an integral key column over one just-written mutation
     * file — the `s:` range a merge uses to prove two sides touched
     * disjoint keys. One footer + one tiny file scan (mutation files
@@ -735,39 +701,54 @@ object SnapshotLog extends QueryModule {
       else Some((r.getLong(0), r.getLong(1)))
     }
 
-  /** `stats` entries for freshly-written mutation files: each file's
-    * key range, keyed by its path — riding the same manifest `s:`
-    * lines as data-file ranges (memory: stats that belong to a
-    * snapshot ride the manifest). Advisory like all stats; [[merge]]
-    * is the consumer. */
-  private def mutationStats(s: SparkSession, files: Seq[(String, Long)],
-      key: String): Map[String, (Long, Long)] =
-    files.flatMap { case (p, _) => keyRange(s, p, key).map(p -> _) }.toMap
-
-  def deleteMor(s: SparkSession, table: String, keys: DataFrame,
-      key: String): Long = {
+  /** The one merge-on-read commit every mutation writer goes through:
+    * `shape` turns the head manifest into the writer's already-shaped
+    * batch, written as ONE small file under `data/<kind>/` that the
+    * next snapshot carries as a `d:`/`u:`/`p:` entry with the next
+    * SEQUENCE and its own [[keyRange]] as an `s:` line, committed
+    * against the head it was derived from.
+    * Data files are untouched, so stats AND ndv blobs carry verbatim
+    * (post-delete the blob NDV is an upper bound until compaction —
+    * advisory metadata, like stats under MOR); the other mutation
+    * files, seqs and the persisted schema carry too — in this one
+    * place, so no writer can drop a field (the i25/r11 carry-forward
+    * lesson). */
+  private def commitMutation(s: SparkSession, table: String, kind: String,
+      op: String, key: String)(shape: Manifest => DataFrame): Long = {
     val cur = currentVersion(s, table)
     val m = readManifest(s, table, cur).getOrElse(throw new IllegalStateException(
-      s"MOR delete against unseeded $table"))
-    val dir = s"$table/data/deletes/${java.util.UUID.randomUUID}"
-    keys.select(col(key)).distinct().coalesce(1).write.parquet(dir)
-    val df = dataFiles(s, dir)
-    // data files are untouched, so stats AND ndv blobs carry verbatim
-    // (post-delete the blob NDV is an upper bound until compaction —
-    // advisory metadata, like stats under MOR); updates, patches,
-    // seqs and the persisted schema carry too (the i25/r11
-    // carry-forward lesson). The delete file itself contributes its
-    // key range so a later merge can prove disjointness.
-    commit(s, table, "mor-delete", m.files, Some(cur),
-      m.stats ++ mutationStats(s, df, key), m.deletes ++ df, m.ndv,
-      updates = m.updates, seqs = m.seqs ++ df.map(_._1 -> nextSeq(m, cur)),
-      schema = m.schema, patches = m.patches)
+      s"MOR $kind commit against unseeded $table"))
+    val dir = s"$table/data/$kind/${java.util.UUID.randomUUID}"
+    shape(m).coalesce(1).write.parquet(dir)
+    val f = dataFiles(s, dir)
+    def plus(k: String, entries: Seq[(String, Long)]) =
+      if (k == kind) entries ++ f else entries
+    commit(s, table, op, m.files, Some(cur),
+      m.stats ++ f.flatMap { case (p, _) => keyRange(s, p, key).map(p -> _) },
+      plus("deletes", m.deletes), m.ndv,
+      updates = plus("updates", m.updates),
+      seqs = m.seqs ++ f.map(_._1 -> nextSeq(m, cur)),
+      schema = m.schema, patches = plus("patches", m.patches))
   }
+
+  /** Commit a MERGE-ON-READ equality delete: `keys` (one column named
+    * `key`) is written as a small delete file and the new snapshot
+    * carries the SAME data files plus the delete file — O(deleted
+    * keys) work and one atomic commit, never a data-file rewrite.
+    * Deletes accumulate across versions until [[compactMor]] folds
+    * them in; [[readMor]] applies them at scan time. The delete file
+    * gets the next commit's SEQUENCE, so it beats any earlier update
+    * file on the same key (and loses to a later one) — the Iceberg
+    * sequence-number contract. */
+  def deleteMor(s: SparkSession, table: String, keys: DataFrame,
+      key: String, op: String = "mor-delete"): Long =
+    commitMutation(s, table, "deletes", op, key)(_ =>
+      keys.select(col(key)).where(col(key).isNotNull).distinct())
 
   /** Commit a MERGE-ON-READ equality UPDATE (u10, the Hudi MOR
     * log-file shape): `rows` are FULL replacement rows (duplicate
     * keys within the batch are collapsed deterministically — see
-    * [[updateMorAs]]) written as a
+    * `orderBy` below) written as a
     * small update file the new snapshot carries as a `u:` line with
     * the next commit's sequence. O(batch rows) + one manifest, ZERO
     * data-file rewrites — where the copy-on-write apply (u04) rewrites
@@ -785,19 +766,13 @@ object SnapshotLog extends QueryModule {
     * per key — max over (orderBy columns, then the remaining non-key
     * columns as a deterministic tiebreak). Without it the collapse is
     * value-maximal over the whole non-key struct: deterministic and
-    * replay-idempotent, but NOT recency-based. */
+    * replay-idempotent, but NOT recency-based.
+    *
+    * `op`: the streaming layer stamps its (appId, batchId) marker here
+    * so a replayed batch is detectable in the crash window. */
   def updateMor(s: SparkSession, table: String, rows: DataFrame,
-      key: String, orderBy: Seq[String] = Nil): Long =
-    updateMorAs(s, table, rows, key, "mor-update", orderBy)
-
-  /** [[updateMor]] with a caller-chosen op string — the streaming
-    * layer stamps its (appId, batchId) marker here so a replayed
-    * batch is detectable in the crash window. */
-  def updateMorAs(s: SparkSession, table: String, rows: DataFrame,
-      key: String, op: String, orderBy: Seq[String] = Nil): Long = {
-    val cur = currentVersion(s, table)
-    val m = readManifest(s, table, cur).getOrElse(throw new IllegalStateException(
-      s"MOR update against unseeded $table"))
+      key: String, orderBy: Seq[String] = Nil,
+      op: String = "mor-update"): Long = {
     val bad = orderBy.filter(c => c == key || !rows.columns.contains(c))
     require(bad.isEmpty,
       s"orderBy columns must be non-key columns of the batch: $bad")
@@ -805,38 +780,32 @@ object SnapshotLog extends QueryModule {
     // deep in the collapse as an opaque ambiguity error
     require(orderBy.distinct.size == orderBy.size,
       s"orderBy columns must be distinct: $orderBy")
-    // same irrevocable-commit hazard as patchMor: a re-typed column in
-    // an update file would NULL/throw through the read union and bake
-    // in at compaction
-    requireMutationTypes(tableTypes(s, m), rows.schema, "update")
-    val dir = s"$table/data/updates/${java.util.UUID.randomUUID}"
-    // PER-KEY COLLAPSE before the write: duplicate keys within one
-    // batch would BOTH win the latest-wins overlay (same sequence)
-    // and both survive to readers, and compaction would bake the
-    // duplicate in forever. Two rows per key in one batch is the
-    // normal CDC case (applyBatch collapses via latestOps). The
-    // struct comparison is field-ORDER-sensitive, so the caller's
-    // orderBy columns lead: max over the struct is then "latest by
-    // the feed's own order, remaining columns as the deterministic
-    // tiebreak" — and with no orderBy it degrades to the
-    // value-maximal total order, so replays stay idempotent either
-    // way.
-    val others = rows.columns.filterNot(_ == key)
-    val cmpCols = orderBy ++ others.filterNot(orderBy.contains)
-    rows.where(col(key).isNotNull)
-      .groupBy(col(key))
-      .agg(max(struct(cmpCols.map(col).toSeq: _*)).as("__r"))
-      .select(col(key) +: others.toSeq.map(c => col(s"__r.$c").as(c)): _*)
-      .coalesce(1).write.parquet(dir)
-    val uf = dataFiles(s, dir)
-    // data files untouched: stats/ndv carry (advisory under MOR —
-    // updated rows may drift outside a file's recorded range only if
-    // the update REKEYS, which equality updates by definition do not);
-    // the update file contributes its own key range for merge
-    commit(s, table, op, m.files, Some(cur),
-      m.stats ++ mutationStats(s, uf, key), m.deletes, m.ndv,
-      updates = m.updates ++ uf, seqs = m.seqs ++ uf.map(_._1 -> nextSeq(m, cur)),
-      schema = m.schema, patches = m.patches)
+    commitMutation(s, table, "updates", op, key) { m =>
+      // same irrevocable-commit hazard as patchMor: a re-typed column in
+      // an update file would NULL/throw through the read union and bake
+      // in at compaction
+      requireMutationTypes(tableTypes(s, m), rows.schema, "update")
+      // PER-KEY COLLAPSE before the write: duplicate keys within one
+      // batch would BOTH win the latest-wins overlay (same sequence)
+      // and both survive to readers, and compaction would bake the
+      // duplicate in forever. Two rows per key in one batch is the
+      // normal CDC case (applyBatch collapses via latestOps). The
+      // struct comparison is field-ORDER-sensitive, so the caller's
+      // orderBy columns lead: max over the struct is then "latest by
+      // the feed's own order, remaining columns as the deterministic
+      // tiebreak" — and with no orderBy it degrades to the
+      // value-maximal total order, so replays stay idempotent either
+      // way. Data files stay untouched, so carried stats stay valid:
+      // updated rows could drift outside a file's recorded range only
+      // if the update REKEYED, which equality updates by definition
+      // do not.
+      val others = rows.columns.filterNot(_ == key)
+      val cmpCols = orderBy ++ others.filterNot(orderBy.contains)
+      rows.where(col(key).isNotNull)
+        .groupBy(col(key))
+        .agg(max(struct(cmpCols.map(col).toSeq: _*)).as("__r"))
+        .select(col(key) +: others.toSeq.map(c => col(s"__r.$c").as(c)): _*)
+    }
   }
 
   /** The table's column→type map for the mutation-write type guards.
@@ -909,21 +878,45 @@ object SnapshotLog extends QueryModule {
       readFile(s, p).withColumn("__seq", lit(m.seqs.getOrElse(p, 0L)))
     }.reduce(_.unionByName(_, allowMissingColumns = true)))
 
-  /** Overlay a snapshot's MOR mutations (equality deletes + equality
-    * updates) on its data scan: per key the HIGHEST-sequence mutation
+  /** Read snapshot `v` with its equality deletes, full updates AND
+    * partial-column patches applied — the Iceberg v2 / Hudi MOR read
+    * path. Resolution is two steps of the same sequence algebra: (1)
+    * the ROW-DEFINING winner per key — data row (implicitly sequence
+    * 0), latest full update, or delete: the HIGHEST-sequence mutation
     * wins (update → its replacement row is live; delete → the key is
-    * gone), and ANY mutation on a key masks its data row (data rows
-    * are implicitly sequence 0). All mutation state is small by
+    * gone), ANY mutation on a key masks its data row, and the winner's
+    * sequence is kept as `__rseq`; (2) per patched COLUMN, the latest
+    * patch value per key applies iff its sequence beats `__rseq` (a
+    * patch older than the row it would modify is masked; the latest
+    * patch overall is the latest above `__rseq` whenever any is —
+    * sequences are unique per commit). All mutation state is small by
     * construction — every join below broadcasts it; the data scan is
-    * never shuffled. */
-  private def applyMutations(s: SparkSession, m: Manifest, key: String,
+    * never shuffled. Plan shape: the base scan + one broadcast probe
+    * (deletes/updates) + ONE slim broadcast join PER PATCHED COLUMN
+    * (patch relations are O(patch rows), never data-sized); patch-file
+    * schemas are read on the driver, bounded by the patch-file count
+    * (the fileStats class) — compaction keeps that count small by
+    * construction. */
+  def readMor(s: SparkSession, table: String, v: Long,
+      key: String): DataFrame = {
+    val m = readManifest(s, table, v).getOrElse(throw new IllegalArgumentException(
+      s"no committed snapshot v$v in $table"))
+    resolveMor(s, m, key, dataScan(s, m))
+  }
+
+  /** [[readMor]]'s resolution over `data`, a scan of (a subset of)
+    * `m`'s data files — the consumer overlay paths hand it pruned or
+    * pointer-resolved scans. */
+  private def resolveMor(s: SparkSession, m: Manifest, key: String,
       data: DataFrame): DataFrame = {
     val del = mutationScan(s, m, m.deletes)
     val upd = mutationScan(s, m, m.updates)
-    (del, upd) match {
-      case (None, None) => data
+    // row-defining winner per key, carrying its sequence out
+    val resolved: DataFrame = (del, upd) match {
+      case (None, None) => data.withColumn("__rseq", lit(0L))
       case (Some(dk), None) => // pure-delete fast path (u08/u09 shape)
         data.join(broadcast(dk.select(key).distinct()), Seq(key), "left_anti")
+          .withColumn("__rseq", lit(0L))
       case _ =>
         val muts = del.map(_.select(col(key), col("__seq"),
             lit(0).as("__upd"))).toSeq ++
@@ -935,123 +928,14 @@ object SnapshotLog extends QueryModule {
           .agg(max(struct(col("__seq"), col("__upd"))).as("w"))
           .select(col(key), col("w.__seq").as("__seq"),
             col("w.__upd").as("__upd"))
-        val liveUpd = upd.get.join(
-          broadcast(win.filter(col("__upd") === 1).select(key, "__seq")),
-          Seq(key, "__seq"), "left_semi").drop("__seq")
-        data.join(broadcast(win.select(key)), Seq(key), "left_anti")
-          .unionByName(liveUpd, allowMissingColumns = true)
-    }
-  }
-
-  /** Read snapshot `v` with its equality deletes AND updates applied:
-    * the data scan anti-joins the (small, broadcast) mutation key set,
-    * then latest-wins update rows union in. Reader cost is the scan +
-    * one broadcast probe per row — the Iceberg v2 / Hudi MOR read
-    * path. */
-  def readMor(s: SparkSession, table: String, v: Long,
-      key: String): DataFrame = {
-    val m = readManifest(s, table, v).getOrElse(throw new IllegalArgumentException(
-      s"no committed snapshot v$v in $table"))
-    // a patch-carrying snapshot needs the per-column coalesce — this
-    // signature HAS the key, so delegate instead of refusing (the
-    // overlayDeletes paths, which lack it, refuse)
-    if (m.patches.nonEmpty) readPatched(s, table, v, key)
-    else applyMutations(s, m, key, dataScan(s, m))
-  }
-
-  /** Commit a PARTIAL-COLUMN patch (u11): `patch` carries the key
-    * plus a SUBSET of the table's columns; per key the named columns
-    * are overwritten, everything else keeps its current value — the
-    * Hudi partial-update payload / "patch file" shape. A batch
-    * commits O(batch rows × patched columns) + one manifest, ZERO
-    * data-file rewrites, where updateMor must ship FULL replacement
-    * rows (forcing the writer to read-modify-write upstream when the
-    * feed only knows the changed columns). Sequencing is the shared
-    * mutation contract: the patch takes the committing version's
-    * sequence; a later delete retracts it; a later full update masks
-    * it; a later patch overrides it column-by-column; patches never
-    * insert (a key absent from the resolved base is a no-op).
-    * Duplicate keys within a batch collapse value-maximally first
-    * (the updateMorAs rule, same replay-idempotence rationale). */
-  def patchMor(s: SparkSession, table: String, patch: DataFrame,
-      key: String, op: String = "mor-patch"): Long = {
-    val cur = currentVersion(s, table)
-    val m = readManifest(s, table, cur).getOrElse(throw new IllegalStateException(
-      s"MOR patch against unseeded $table"))
-    val others = patch.columns.filterNot(_ == key)
-    require(patch.columns.contains(key) && others.nonEmpty,
-      s"patch must carry the key '$key' plus at least one column")
-    // patched columns must exist in the table's schema WITH the same
-    // type — a typo'd column would ride the manifest forever and
-    // silently never apply; a type-mismatched one is worse: the
-    // per-column coalesce would coerce the whole column (and
-    // compaction would bake the coerced type into data files,
-    // diverging from the persisted schema) with no API to remove a
-    // committed patch. The KEY column is checked too (a mistyped key
-    // never matches and the patch silently no-ops forever).
-    val tbl = tableTypes(s, m)
-    val missing = others.filterNot(tbl.contains)
-    require(missing.isEmpty, s"patch names columns absent from the table " +
-      s"schema: ${missing.mkString(", ")}")
-    requireMutationTypes(tbl, patch.schema, "patch")
-    val dir = s"$table/data/patches/${java.util.UUID.randomUUID}"
-    patch.where(col(key).isNotNull)
-      .groupBy(col(key))
-      .agg(max(struct(others.map(col).toSeq: _*)).as("__r"))
-      .select(col(key) +: others.toSeq.map(c => col(s"__r.$c").as(c)): _*)
-      .coalesce(1).write.parquet(dir)
-    val pf = dataFiles(s, dir)
-    commit(s, table, op, m.files, Some(cur),
-      m.stats ++ mutationStats(s, pf, key), m.deletes, m.ndv,
-      updates = m.updates, seqs = m.seqs ++ pf.map(_._1 -> nextSeq(m, cur)),
-      schema = m.schema, patches = m.patches ++ pf)
-  }
-
-  /** Read snapshot `v` with deletes, full updates AND partial-column
-    * patches applied. Resolution is two steps of the same sequence
-    * algebra: (1) the ROW-DEFINING winner per key — data row (seq 0),
-    * latest full update, or delete — exactly [[readMor]]'s collapse,
-    * but keeping the winner's sequence as `__rseq`; (2) per patched
-    * COLUMN, the latest patch value per key applies iff its sequence
-    * beats `__rseq` (a patch older than the row it would modify is
-    * masked; the latest patch overall is the latest above `__rseq`
-    * whenever any is — sequences are unique per commit). Plan shape:
-    * the base scan + one broadcast probe (deletes/updates) + ONE slim
-    * broadcast join PER PATCHED COLUMN (patch relations are O(patch
-    * rows), never data-sized); patch-file schemas are read on the
-    * driver, bounded by the patch-file count (the fileStats class) —
-    * compaction keeps that count small by construction. */
-  def readPatched(s: SparkSession, table: String, v: Long,
-      key: String): DataFrame = {
-    val m = readManifest(s, table, v).getOrElse(throw new IllegalArgumentException(
-      s"no committed snapshot v$v in $table"))
-    val base0 = dataScan(s, m)
-    val del = mutationScan(s, m, m.deletes)
-    val upd = mutationScan(s, m, m.updates)
-    // row-defining winner per key, carrying its sequence out
-    val resolved: DataFrame = (del, upd) match {
-      case (None, None) => base0.withColumn("__rseq", lit(0L))
-      case _ =>
-        val muts = del.map(_.select(col(key), col("__seq"),
-            lit(0).as("__upd"))).toSeq ++
-          upd.map(_.select(col(key), col("__seq"), lit(1).as("__upd"))).toSeq
-        val all = muts.reduce(_.unionByName(_))
-        val win = all.groupBy(key)
-          .agg(max(struct(col("__seq"), col("__upd"))).as("w"))
-          .select(col(key), col("w.__seq").as("__seq"),
-            col("w.__upd").as("__upd"))
-        val untouched = base0
+        val untouched = data
           .join(broadcast(win.select(key)), Seq(key), "left_anti")
           .withColumn("__rseq", lit(0L))
-        upd match {
-          case Some(u) =>
-            val liveUpd = u.join(
-              broadcast(win.filter(col("__upd") === 1).select(key, "__seq")),
-              Seq(key, "__seq"), "left_semi")
-              .withColumnRenamed("__seq", "__rseq")
-            untouched.unionByName(liveUpd, allowMissingColumns = true)
-          case None => untouched // pure deletes: winners are all drops
-        }
+        val liveUpd = upd.get.join(
+          broadcast(win.filter(col("__upd") === 1).select(key, "__seq")),
+          Seq(key, "__seq"), "left_semi")
+          .withColumnRenamed("__seq", "__rseq")
+        untouched.unionByName(liveUpd, allowMissingColumns = true)
     }
     // per-column patch overlay
     var out = resolved
@@ -1080,6 +964,46 @@ object SnapshotLog extends QueryModule {
     out.drop("__rseq")
   }
 
+  /** Commit a PARTIAL-COLUMN patch (u11): `patch` carries the key
+    * plus a SUBSET of the table's columns; per key the named columns
+    * are overwritten, everything else keeps its current value — the
+    * Hudi partial-update payload / "patch file" shape. A batch
+    * commits O(batch rows × patched columns) + one manifest, ZERO
+    * data-file rewrites, where updateMor must ship FULL replacement
+    * rows (forcing the writer to read-modify-write upstream when the
+    * feed only knows the changed columns). Sequencing is the shared
+    * mutation contract: the patch takes the committing version's
+    * sequence; a later delete retracts it; a later full update masks
+    * it; a later patch overrides it column-by-column; patches never
+    * insert (a key absent from the resolved base is a no-op).
+    * Duplicate keys within a batch collapse value-maximally first
+    * (the updateMor rule, same replay-idempotence rationale). */
+  def patchMor(s: SparkSession, table: String, patch: DataFrame,
+      key: String, op: String = "mor-patch"): Long = {
+    val others = patch.columns.filterNot(_ == key)
+    require(patch.columns.contains(key) && others.nonEmpty,
+      s"patch must carry the key '$key' plus at least one column")
+    commitMutation(s, table, "patches", op, key) { m =>
+      // patched columns must exist in the table's schema WITH the same
+      // type — a typo'd column would ride the manifest forever and
+      // silently never apply; a type-mismatched one is worse: the
+      // per-column coalesce would coerce the whole column (and
+      // compaction would bake the coerced type into data files,
+      // diverging from the persisted schema) with no API to remove a
+      // committed patch. The KEY column is checked too (a mistyped key
+      // never matches and the patch silently no-ops forever).
+      val tbl = tableTypes(s, m)
+      val missing = others.filterNot(tbl.contains)
+      require(missing.isEmpty, s"patch names columns absent from the table " +
+        s"schema: ${missing.mkString(", ")}")
+      requireMutationTypes(tbl, patch.schema, "patch")
+      patch.where(col(key).isNotNull)
+        .groupBy(col(key))
+        .agg(max(struct(others.map(col).toSeq: _*)).as("__r"))
+        .select(col(key) +: others.toSeq.map(c => col(s"__r.$c").as(c)): _*)
+    }
+  }
+
   /** Fold accumulated equality deletes and updates into the data
     * files: rewrite the surviving rows, commit a snapshot with NO
     * mutation files. The Iceberg `rewrite_data_files` maintenance step
@@ -1092,8 +1016,8 @@ object SnapshotLog extends QueryModule {
       s"MOR compaction against unseeded $table"))
     if (m.deletes.isEmpty && m.updates.isEmpty && m.patches.isEmpty) return cur
     val dir = s"$table/data/compact-v$cur"
-    // readMor is patch-aware (delegates to readPatched), so one
-    // compaction folds deletes, updates AND partial-column patches
+    // readMor resolves patches too, so one compaction folds
+    // deletes, updates AND partial-column patches
     readMor(s, table, cur, key)
       .repartition(math.max(1, m.files.size)).write.parquet(dir)
     // carried stats/ndv would describe the REWRITTEN-AWAY files —

@@ -524,23 +524,7 @@ object CdcStream {
   def deleteBatch(s: SparkSession, table: String, keys: DataFrame,
       batchId: Long, key: String, appId: String = "cdc-del"): Long = {
     if (alreadyApplied(s, table, appId, batchId)) return -1L
-    val cur = SnapshotLog.currentVersion(s, table)
-    val m = SnapshotLog.readManifest(s, table, cur).getOrElse(
-      throw new IllegalStateException(s"MOR delete against unseeded $table"))
-    // deterministic per-batch dir: a crash after the write but before
-    // the commit leaves an orphan the retry simply overwrites
-    val dir = s"$table/data/deletes/${opName(appId, batchId)}"
-    keys.select(col(key)).where(col(key).isNotNull).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val df = SnapshotLog.dataFiles(s, dir)
-    // data files untouched → stats, ndv blobs, pending updates and the
-    // persisted schema all carry verbatim; the new delete file gets
-    // the committing version as its sequence so it beats any earlier
-    // update on the same key
-    val v = SnapshotLog.commit(s, table, opName(appId, batchId), m.files,
-      Some(cur), m.stats, m.deletes ++ df, m.ndv,
-      updates = m.updates, seqs = m.seqs ++ df.map(_._1 -> SnapshotLog.nextSeq(m, cur)),
-      schema = m.schema, patches = m.patches)
+    val v = SnapshotLog.deleteMor(s, table, keys, key, opName(appId, batchId))
     writeTxn(s, table, appId, batchId, v)
     v
   }
@@ -575,8 +559,8 @@ object CdcStream {
       batchId: Long, key: String, appId: String = "cdc-upd",
       orderBy: Seq[String] = Nil): Long = {
     if (alreadyApplied(s, table, appId, batchId)) return -1L
-    val v = SnapshotLog.updateMorAs(s, table, rows, key,
-      opName(appId, batchId), orderBy)
+    val v = SnapshotLog.updateMor(s, table, rows, key, orderBy,
+      opName(appId, batchId))
     writeTxn(s, table, appId, batchId, v)
     v
   }

@@ -862,7 +862,7 @@ class SnapshotLogSpec extends AnyFunSuite {
         s"refusal cited the wrong guard: ${patchRefusal.getMessage}")
     }
     val v = SnapshotLog.currentVersion(s, table)
-    val r = SnapshotLog.readPatched(s, table, v, "o_orderkey")
+    val r = SnapshotLog.readMor(s, table, v, "o_orderkey")
     val n9 = keys9.count(); val n21 = keys21.count()
     assert(r.filter(col("o_orderpriority") === "PB").count() === n21)
     assert(r.filter(col("o_orderpriority") === "PA").count() === n9 - n21,
@@ -879,7 +879,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     SnapshotLog.patchMor(s, table,
       keys21.select(col("o_orderkey"), lit("ZOMBIE").as("o_orderpriority")),
       "o_orderkey")
-    val r2 = SnapshotLog.readPatched(s, table,
+    val r2 = SnapshotLog.readMor(s, table,
       SnapshotLog.currentVersion(s, table), "o_orderkey")
     assert(r2.filter(col("o_orderpriority").isin("PB", "ZOMBIE")).count() === 0L,
       "a delete failed to retract patched/late-patched rows")
@@ -899,6 +899,30 @@ class SnapshotLogSpec extends AnyFunSuite {
       !fs.exists(new org.apache.hadoop.fs.Path(p)),
       s"expired patch file survived: $p"))
     assert(SnapshotLog.readAt(s, table, vC).count() === n2)
+    // the resolver's plan contract over deletes + updates + patches:
+    // every join broadcasts its mutation side BY HINT (auto-broadcast
+    // is off on an isolated session, so no size threshold can supply
+    // it) — no shuffled join, the data scan is never shuffled
+    locally {
+      val t3 = freshTable()
+      seed(t3, 0)
+      SnapshotLog.deleteMor(s, t3, keys21.select("o_orderkey"), "o_orderkey")
+      SnapshotLog.updateMor(s, t3,
+        keys9.withColumn("o_orderpriority", lit("UP")), "o_orderkey")
+      SnapshotLog.patchMor(s, t3,
+        keys9.select(col("o_orderkey"), lit("PP").as("o_orderstatus")),
+        "o_orderkey")
+      val iso = s.newSession()
+      iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val mor = SnapshotLog.readMor(iso, t3,
+        SnapshotLog.currentVersion(s, t3), "o_orderkey")
+      mor.collect() // AQE settles the final plan on this queryExecution
+      import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+      val joins = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(mor.queryExecution.executedPlan) { case j: BaseJoinExec => j }
+      assert(joins.nonEmpty && joins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"readMor planned a non-broadcast join: ${joins.map(_.nodeName)}")
+    }
   }
 
   test("MOR update orderBy: an ordered feed's per-key collapse keeps the " +

@@ -739,6 +739,10 @@ class StreamingSpec extends AnyFunSuite {
       .select("o_orderkey")
     // delete stream's batch 0 (appId cdc-del)
     assert(CdcStream.deleteBatch(s, table, doomed, 0L, "o_orderkey") === 2L)
+    // its delete file carries its own s: key range, as deleteMor's do
+    val m2 = SnapshotLog.readManifest(s, table, 2L).get
+    assert(m2.deletes.nonEmpty && m2.deletes.forall(e => m2.stats.contains(e._1)),
+      "deleteBatch committed a delete file without its key range")
     // upsert stream's batch 0 (appId cdc) — MUST apply despite the
     // same batchId: each stream's checkpoint numbers from 0 (the
     // Delta (appId, version) contract)
